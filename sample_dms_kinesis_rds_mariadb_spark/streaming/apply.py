@@ -8,19 +8,29 @@ runs on top (projections P1/P2, counts A1, the FK join J1, anything else).
 
 Storage is hash-bucketed copy-on-write parquet: each table's rows live in
 ``n_buckets`` PK-hash buckets, each bucket versioned independently. Applying
-a micro-batch rewrites ONLY the buckets holding touched keys — write
-amplification is O(batch keys / n_buckets · table), not O(table) — and
-superseded bucket versions are vacuumed immediately after publish. At 100 TB
-the identical logic is a Delta / Iceberg ``MERGE INTO`` (same plan shape:
-hash join on pk + file rewrite limited to touched files); plain parquet +
-a driver-side bucket→version manifest is used here to stay dependency-free.
-State is re-projected through the evolving TableDef on every read (each
-bucket conformed independently, so buckets written before/after a DDL can
-coexist), so schema drift (T5) never invalidates stored files.
+a micro-batch reads and rewrites ONLY the buckets holding touched keys —
+write amplification is O(batch keys / n_buckets · table), not O(table) —
+and superseded bucket versions are vacuumed after publish. At 100 TB the
+identical logic is a Delta / Iceberg ``MERGE INTO`` (same plan shape: hash
+join on pk + file rewrite limited to touched files); plain parquet + a
+driver-side manifest is used here to stay dependency-free.
+
+The manifest entry of a bucket is ``[version, has_data, schema]``: the
+schema is the StructType the bucket version was written with (``df.schema``
+at publish, known without a Spark job). A read groups the live buckets by
+stored schema and issues one ``spark.read.schema(stored).parquet(*dirs)``
+per group — no footer inference, so building a plan runs no Spark job —
+then conforms every group to the evolving TableDef. Buckets written before
+and after a DDL land in different groups and read back uniformly, so schema
+drift (T5) never invalidates stored files. Registering a view therefore
+plans every bucket of the table but reads none of them; the data is read
+only when a query over the view runs.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import shutil
 import threading
@@ -29,6 +39,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
     TableDef,
@@ -56,9 +67,13 @@ class TableMaterializer:
 
     Layout: ``<path>/<schema>.<table>/b<k>/v<NNNNNN>/*.parquet`` — bucket k's
     current contents are its highest published version (older versions are
-    vacuumed at publish time). The driver-side manifest ``_buckets`` maps
-    (schema, table) → {bucket: (version, has_data)}; an empty bucket keeps a
-    version number but no directory.
+    vacuumed once past the grace window). The driver-side manifest
+    ``_buckets`` maps (schema, table) → {bucket: (version, has_data,
+    schema)}, persisted as ``[version, has_data, schema]`` per bucket in
+    ``_manifest.json``; ``schema`` is the StructType the version was written
+    with, ``None`` for an empty bucket, which keeps a version number but no
+    directory. Reads scan once per distinct stored schema (see the module
+    docstring), so a read plan is built without a Spark job.
     """
 
     MANIFEST_FILE = "_manifest.json"
@@ -80,8 +95,10 @@ class TableMaterializer:
         # against the old files (poor-man's snapshot isolation — Delta keeps
         # whole snapshot history for the same reason). 0 = reap immediately.
         self.vacuum_grace_sec = vacuum_grace_sec
-        # (schema, table) -> {bucket: (version, has_data)}
-        self._buckets: dict[tuple[str, str], dict[int, tuple[int, bool]]] = {}
+        # (schema, table) -> {bucket: (version, has_data, stored schema)}
+        self._buckets: dict[
+            tuple[str, str], dict[int, tuple[int, bool, T.StructType | None]]
+        ] = {}
         # retired version dirs awaiting vacuum: [(path, retired_at_monotonic)]
         self._retired: list[tuple[str, float]] = []
         # bumped on every state mutation (publish/restore); consumers cache
@@ -111,51 +128,44 @@ class TableMaterializer:
         return (schema, table) in self._buckets
 
     def table(self, schema: str, table: str) -> DataFrame:
-        """Current typed state, conformed to the evolved schema. Each bucket
-        conforms independently so buckets written across a DDL boundary read
-        back uniformly."""
-        tdef = self.registry.get(schema, table)
-        with self._lock:
-            vers = dict(self._buckets.get((schema, table), {}))
-        parts = [
-            conform(
-                self.spark.read.parquet(self._bucket_dir(schema, table, k, v)), tdef
-            )
-            for k, (v, has_data) in sorted(vers.items())
-            if has_data
-        ]
-        if not parts:
-            return self.spark.createDataFrame([], tdef.struct)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        """Current typed state, conformed to the evolved schema."""
+        return self._read(schema, table, self.registry.get(schema, table))
 
-    def _read_buckets(
-        self, schema: str, table: str, buckets: list[int], tdef: TableDef
+    def _read(
+        self,
+        schema: str,
+        table: str,
+        tdef: TableDef,
+        buckets: list[int] | None = None,
     ) -> DataFrame:
+        """The non-empty buckets among ``buckets`` (all when None): one scan
+        per distinct stored schema, each conformed to ``tdef`` so buckets
+        written across a DDL boundary read back uniformly. At most
+        ``n_buckets`` paths (16 by default, under Spark's parallel-listing
+        threshold of 32), so file listing stays on the driver."""
         with self._lock:
             vers = dict(self._buckets.get((schema, table), {}))
+        groups: dict[T.StructType, list[str]] = {}
+        for k in sorted(vers) if buckets is None else buckets:
+            v, has_data, stored = vers.get(k, (0, False, None))
+            if has_data:
+                groups.setdefault(stored, []).append(
+                    self._bucket_dir(schema, table, k, v)
+                )
         parts = [
-            conform(
-                self.spark.read.parquet(self._bucket_dir(schema, table, k, v)), tdef
-            )
-            for k in buckets
-            for (v, has_data) in [vers.get(k, (0, False))]
-            if has_data
+            conform(self.spark.read.schema(stored).parquet(*dirs), tdef)
+            for stored, dirs in groups.items()
         ]
         if not parts:
             return self.spark.createDataFrame([], tdef.struct)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def register_view(self, schema: str, table: str) -> None:
         """Register BOTH a schema-qualified view (``{schema}_{table}`` —
         temp views are single-part names) and the bare table name. With two
         schemas holding the same table name, the bare view is last-writer-
-        wins; the qualified views stay unambiguous."""
+        wins; the qualified views stay unambiguous. Plans every bucket but
+        reads none of them: no Spark job runs here."""
         df = self.table(schema, table)
         df.createOrReplaceTempView(f"{schema}_{table}")
         df.createOrReplaceTempView(table)
@@ -170,9 +180,10 @@ class TableMaterializer:
         pk: str,
     ) -> None:
         """One distributed write of ``df`` partitioned by PK bucket, then an
-        atomic (driver-side) manifest flip of the touched buckets + vacuum of
-        their superseded versions. Untouched buckets are never read, written,
-        or listed."""
+        atomic (driver-side) manifest flip of the touched buckets, each
+        recording ``df.schema`` as its stored schema, + vacuum of their
+        superseded versions. Untouched buckets are not written."""
+        stored = df.schema
         tdir = self._table_dir(schema, table)
         staging = os.path.join(tdir, f".staging-{uuid.uuid4().hex}")
         (
@@ -186,16 +197,16 @@ class TableMaterializer:
                 vers = self._buckets.setdefault((schema, table), {})
                 now = time.monotonic()
                 for k in touched_buckets:
-                    old_v, old_has_data = vers.get(k, (0, False))
+                    old_v, old_has_data, _ = vers.get(k, (0, False, None))
                     new_v = old_v + 1
                     src = os.path.join(staging, f"pkbucket={k}")
                     bdir = os.path.join(tdir, f"b{k:04d}")
                     if os.path.exists(src):
                         os.makedirs(bdir, exist_ok=True)
                         os.rename(src, os.path.join(bdir, f"v{new_v:06d}"))
-                        vers[k] = (new_v, True)
+                        vers[k] = (new_v, True, stored)
                     else:
-                        vers[k] = (new_v, False)  # bucket emptied
+                        vers[k] = (new_v, False, None)  # bucket emptied
                     if old_has_data:
                         self._retired.append(
                             (os.path.join(bdir, f"v{old_v:06d}"), now)
@@ -212,11 +223,12 @@ class TableMaterializer:
         materializer's transaction-log tip. Without it the manifest is
         process-local and a cross-process restart would see every table
         empty even though the bucket files are on disk (caller holds the
-        lock; one tiny JSON per publish)."""
-        import json
-
+        lock; one small JSON per publish)."""
         data = {
-            f"{s}\t{t}": {str(k): [v, hd] for k, (v, hd) in vers.items()}
+            f"{s}\t{t}": {
+                str(k): [v, hd, st.jsonValue() if st is not None else None]
+                for k, (v, hd, st) in vers.items()
+            }
             for (s, t), vers in self._buckets.items()
         }
         tmp = os.path.join(self.path, f".manifest-{uuid.uuid4().hex}.tmp")
@@ -230,21 +242,34 @@ class TableMaterializer:
         manifest — CDC would silently apply onto empty state). No-op when
         state is already loaded or no manifest exists. Session views are
         re-registered for tables the registry knows; others restore lazily
-        once registered. Returns the restored (schema, table) pairs."""
-        import json
+        once registered. Returns the restored (schema, table) pairs.
 
+        Raises ``ValueError`` when an entry holds data but no stored schema
+        (the bucket could not be read back), leaving the state empty."""
         mf = os.path.join(self.path, self.MANIFEST_FILE)
         with self._lock:
             if self._buckets or not os.path.exists(mf):
                 return []
             with open(mf) as f:
                 data = json.load(f)
-            self._buckets = {
-                (key.split("\t")[0], key.split("\t")[1]): {
-                    int(k): (int(v), bool(hd)) for k, (v, hd) in vers.items()
-                }
-                for key, vers in data.items()
-            }
+            buckets = {}
+            for key, vers in data.items():
+                s, t = key.split("\t")
+                entries = buckets[(s, t)] = {}
+                for k, entry in vers.items():
+                    v, hd, *rest = entry
+                    st = rest[0] if rest else None
+                    if hd and st is None:
+                        raise ValueError(
+                            f"{mf}: {s}.{t} bucket {k} version {v} holds data "
+                            "but the manifest records no stored schema for it"
+                        )
+                    entries[int(k)] = (
+                        int(v),
+                        bool(hd),
+                        T.StructType.fromJson(st) if hd else None,
+                    )
+            self._buckets = buckets
             restored = sorted(self._buckets)
             self.state_version += 1
         for s, t in restored:
@@ -425,7 +450,7 @@ class TableMaterializer:
             .distinct()
             .collect()
         )
-        current = self._read_buckets(schema, table, touched_buckets, tdef)
+        current = self._read(schema, table, tdef, touched_buckets)
         merged = current.join(F.broadcast(keys), pk, "left_anti").unionByName(
             survivors
         )

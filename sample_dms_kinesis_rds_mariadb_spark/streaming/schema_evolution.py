@@ -15,7 +15,7 @@ stream schema (SURVEY §1.2); typing happens per-table at apply time.
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -192,10 +192,15 @@ class TableRegistry:
         records): adding an already-present column retypes it in place
         instead of appending a duplicate field; dropping an absent column
         is a no-op.
+
+        Copy-on-write: the ALTER builds a new ``TableDef`` and swaps it in,
+        so a ``TableDef`` obtained from :meth:`get` earlier never changes —
+        a reader conforming several parts sees one schema throughout.
         """
         with self._lock:
             tdef = self._tables[(schema_name, table_name)]
             fields = list(tdef.struct.fields)
+            defaults = dict(tdef.defaults)
             if action == "modify-column":
                 fields = [
                     T.StructField(f.name, mariadb_type_to_spark(new_type), f.nullable)
@@ -205,7 +210,7 @@ class TableRegistry:
                 ]
             elif action == "drop-column":
                 fields = [f for f in fields if f.name != column]
-                tdef.defaults.pop(column, None)
+                defaults.pop(column, None)
             elif action == "add-column":
                 if any(f.name == column for f in fields):
                     fields = [
@@ -221,9 +226,10 @@ class TableRegistry:
                         T.StructField(column, mariadb_type_to_spark(new_type), True)
                     )
                 if default is not None:
-                    tdef.defaults[column] = default
+                    defaults[column] = default
             else:
                 raise ValueError(f"unknown DDL action: {action!r}")
-            tdef.struct = T.StructType(fields)
+            new = replace(tdef, struct=T.StructType(fields), defaults=defaults)
+            self._tables[(schema_name, table_name)] = new
             self.version += 1
-            return tdef
+            return new

@@ -266,6 +266,25 @@ def test_registry_ddl_sequence(spark):
     assert d["author_id"]["Key"] == "PRI"
 
 
+def test_registry_ddl_is_copy_on_write(spark):
+    """An ALTER swaps in a new TableDef: one taken from get() before it is
+    unchanged after, so a reader conforming several parts sees one schema."""
+    reg = TableRegistry()
+    df = spark.createDataFrame([], "author_id INT, email STRING, picture BINARY")
+    reg.register_from_df("db", "authors", df, primary_key="author_id")
+    before = reg.get("db", "authors")
+    struct, defaults = before.struct, dict(before.defaults)
+    reg.apply_ddl("db", "authors", "modify-column", "email", "varchar(100)")
+    reg.apply_ddl("db", "authors", "drop-column", "picture")
+    after = reg.apply_ddl("db", "authors", "add-column", "is_stock", "boolean", "true")
+    assert before.struct == struct and before.struct.names == [
+        "author_id", "email", "picture"]
+    assert before.defaults == defaults == {}
+    assert after is reg.get("db", "authors") and after is not before
+    assert after.struct.names == ["author_id", "email", "is_stock"]
+    assert after.defaults == {"is_stock": "true"}
+
+
 def test_statistics_from_envelope_batch(spark):
     svc = StatisticsService()
     df = spark.createDataFrame(

@@ -2,10 +2,12 @@
 superseded-version vacuum, and pk-changing updates (round-2 items; the
 round-1 materializer rewrote the whole table per micro-batch)."""
 
+import json
 import os
+import time
 
 import pytest
-
+from pyspark.sql import types as T
 
 from sample_dms_kinesis_rds_mariadb_spark.sources.changefeed import FEED_SCHEMA
 from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import TableMaterializer
@@ -165,19 +167,31 @@ def test_cross_process_restart_restores_manifest(spark, tmp_path, mat):
     mat.apply_change_batch(
         _batch(spark, [(1, "update", {"id": "5", "name": "pre-restart", "v": "50"}, None)])
     )
+    # an ALTER, then a publish after it: the buckets now hold two schemas
+    mat.registry.apply_ddl("testdb", "items", "add-column", "flag", "boolean", "true")
+    mat.apply_change_batch(
+        _batch(spark, [(2, "update", {"id": "6", "name": "post-alter", "v": "60",
+                                      "flag": "false"}, None)])
+    )
     # "new process": fresh registry + materializer over the same directory
     registry2 = TableRegistry()
     registry2.register_from_df(
         "testdb",
         "items",
-        spark.createDataFrame([], "id LONG, name STRING, v LONG"),
+        spark.createDataFrame([], "id LONG, name STRING, v LONG, flag BOOLEAN"),
         primary_key="id",
+        defaults={"flag": "true"},
     )
     mat2 = TableMaterializer(spark, registry2, mat.path, n_buckets=N_BUCKETS)
     assert mat2.restore() == [("testdb", "items")]
-    got = {r["id"]: r["name"] for r in mat2.table("testdb", "items").collect()}
+    # pre-ALTER buckets read back through their restored stored schemas
+    stored = {st for _, hd, st in mat2._buckets[("testdb", "items")].values() if hd}
+    assert sorted("flag" in st.names for st in stored) == [False, True]
+    rows = {r["id"]: r for r in mat2.table("testdb", "items").collect()}
+    got = {i: r["name"] for i, r in rows.items()}
     assert len(got) == 100
     assert got[5] == "pre-restart"
+    assert rows[5]["flag"] is True and rows[6]["flag"] is False
     # CDC keeps applying on the restored state
     mat2.apply_change_batch(
         _batch(spark, [(2, "insert", {"id": "500", "name": "post", "v": "1"}, None)])
@@ -185,6 +199,20 @@ def test_cross_process_restart_restores_manifest(spark, tmp_path, mat):
     assert mat2.table("testdb", "items").count() == 101
     # second restore is a no-op (state already loaded)
     assert mat2.restore() == []
+
+    # an entry holding data but no stored schema fails restore() up front
+    with open(os.path.join(mat.path, TableMaterializer.MANIFEST_FILE)) as f:
+        manifest = json.load(f)
+    entries = manifest["testdb\titems"]
+    k = next(k for k, (_, hd, _) in entries.items() if hd)
+    entries[k] = entries[k][:2]
+    broken = tmp_path / "broken"
+    broken.mkdir()
+    (broken / TableMaterializer.MANIFEST_FILE).write_text(json.dumps(manifest))
+    mat3 = TableMaterializer(spark, registry2, str(broken), n_buckets=N_BUCKETS)
+    with pytest.raises(ValueError, match="no stored schema"):
+        mat3.restore()
+    assert not mat3.exists("testdb", "items")
 
 
 def test_reapplying_same_batch_is_idempotent(spark, mat):
@@ -289,3 +317,57 @@ def test_schema_qualified_views(spark, tmp_path):
     assert spark.sql("SELECT v FROM db2_orders").collect()[0]["v"] == "from-db2"
     # bare name resolves to the most recently registered schema
     assert spark.sql("SELECT v FROM orders").collect()[0]["v"] == "from-db2"
+
+
+def _jobs_in_group(spark, action) -> list[int]:
+    """Spark jobs ``action`` runs, counted through a job group set around
+    it. A control job in a second group is awaited first: the status
+    tracker learns of jobs through the ordered listener bus, so once the
+    later control job is visible every job of ``action`` is too."""
+    sc = spark.sparkContext
+    group = f"probe-{time.monotonic_ns()}"
+    try:
+        sc.setJobGroup(group, "probe")
+        action()
+        sc.setJobGroup(f"{group}-control", "control")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-control"):
+        assert time.monotonic() < deadline, "control job never reported"
+        time.sleep(0.05)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_ddl_boundary_reads_as_one_table_without_view_jobs(spark, mat):
+    """Buckets written before and after add-, drop- and modify-column read
+    back through one ``table()`` call conformed to the evolved schema, and
+    building the view over them runs no Spark job (every bucket's stored
+    schema comes from the manifest, never from a parquet footer)."""
+    reg = mat.registry
+    reg.apply_ddl("testdb", "items", "add-column", "flag", "boolean", "true")
+    reg.apply_ddl("testdb", "items", "drop-column", "name")
+    reg.apply_ddl("testdb", "items", "modify-column", "v", "varchar(20)")
+    mat.apply_change_batch(
+        _batch(spark, [(1, "insert", {"id": "500", "v": "x", "flag": "false"}, None)])
+    )
+    entries = mat._buckets[("testdb", "items")].values()
+    assert len({st for _, hd, st in entries if hd}) == 2  # both sides of the DDL
+
+    df = mat.table("testdb", "items")
+    assert [(f.name, f.dataType) for f in df.schema.fields] == [
+        ("id", T.LongType()), ("v", T.StringType()), ("flag", T.BooleanType()),
+    ]
+    rows = {r["id"]: r for r in df.collect()}
+    assert len(rows) == 101
+    # pre-DDL rows, in the old buckets as in the rewritten one: cast + default
+    assert all(
+        (r["v"], r["flag"]) == (str(i * 10), True) for i, r in rows.items() if i != 500
+    )
+    assert (rows[500]["v"], rows[500]["flag"]) == ("x", False)
+
+    assert _jobs_in_group(spark, lambda: mat.register_view("testdb", "items")) == []
+    assert spark.sql("SELECT count(*) AS n FROM items WHERE flag").collect()[0]["n"] == 100
