@@ -3,9 +3,10 @@
 Closes the r12 gap list's item 5: WebP was metadata-only because the
 LOSSY half (VP8) needs an arithmetic-coded predictive codec, but the
 LOSSLESS half carries its Huffman codes IN the stream — the same
-property that made the Vorbis decoder completable (r12) where
-AAC/Opus are printed-table boundaries. Everything here restates the
-public "WebP Lossless Bitstream Specification" (RFC 9649 §3-§5):
+property that made the Vorbis decoder completable (r12), whereas AAC
+and Opus need printed codebook tables that no stream carries.
+Everything here restates the public "WebP Lossless Bitstream
+Specification" (RFC 9649 §3-§5):
 
 * LSB-first bit reader over the VP8L chunk payload;
 * canonical prefix codes (DEFLATE-style assignment, code bits read

@@ -24,6 +24,7 @@ import traceback
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sample_dms_kinesis_rds_mariadb_spark.catalog import SourceCatalog
 from sample_dms_kinesis_rds_mariadb_spark.envelope import control_events
@@ -48,26 +49,17 @@ EXCEPTIONS_TABLE = "awsdms_apply_exceptions"
 # The DMS apply-exceptions table shape (TASK_NAME/TABLE_OWNER/TABLE_NAME/
 # ERROR_TIME/STATEMENT/ERROR in DMS terms) + a synthetic pk for the
 # materializer's keyed storage.
-_EXCEPTIONS_STRUCT = None  # built lazily to avoid importing types at module load
-
-
-def _exceptions_struct():
-    global _EXCEPTIONS_STRUCT
-    if _EXCEPTIONS_STRUCT is None:
-        from pyspark.sql import types as T
-
-        _EXCEPTIONS_STRUCT = T.StructType(
-            [
-                T.StructField("exception_id", T.LongType(), False),
-                T.StructField("task_name", T.StringType()),
-                T.StructField("table_owner", T.StringType()),
-                T.StructField("table_name", T.StringType()),
-                T.StructField("error_time", T.TimestampType()),
-                T.StructField("statement", T.StringType()),
-                T.StructField("error", T.StringType()),
-            ]
-        )
-    return _EXCEPTIONS_STRUCT
+_EXCEPTIONS_STRUCT = T.StructType(
+    [
+        T.StructField("exception_id", T.LongType(), False),
+        T.StructField("task_name", T.StringType()),
+        T.StructField("table_owner", T.StringType()),
+        T.StructField("table_name", T.StringType()),
+        T.StructField("error_time", T.TimestampType()),
+        T.StructField("statement", T.StringType()),
+        T.StructField("error", T.StringType()),
+    ]
+)
 
 
 class ReplicationTask:
@@ -197,7 +189,7 @@ class ReplicationTask:
             self.spec.source,
             tables,
             self.spec.settings,
-            pk_by_table=self._pk_lookup(),
+            pk_by_table=self.registry.primary_keys(),
         ).persist()
         try:
             for schema_name, table_name in tables:
@@ -315,7 +307,7 @@ class ReplicationTask:
             batch_df = batch_df.persist()
             # fresh per batch (cheap driver dict): a table registered after
             # task start routes by its real pk instead of falling back
-            pk_by_table = self._pk_lookup()
+            pk_by_table = self.registry.primary_keys()
             env = encode_change_batch(batch_df, self.spec.settings, pk_by_table).persist()
             try:
                 # effects-before-visibility: registry evolution and table
@@ -395,16 +387,6 @@ class ReplicationTask:
         )
         return excs
 
-    def _pk_lookup(self) -> dict[tuple[str, str], str]:
-        # snapshot under the registry's own lock: concurrent register()
-        # from another task/thread must not blow up the dict iteration
-        lock = getattr(self.registry, "_lock", None)
-        tables = getattr(self.registry, "_tables", {})
-        if lock is not None:
-            with lock:
-                return {k: td.primary_key for k, td in tables.items()}
-        return {k: td.primary_key for k, td in tables.items()}
-
     def _emit_exceptions_bootstrap(self) -> None:
         """Exception-table bootstrap control event at CDC task start (T7):
         the reference expects one ``awsdms_apply_exceptions`` create per CDC
@@ -434,7 +416,7 @@ class ReplicationTask:
                 TableDef(
                     schema_name=self.default_schema,
                     table_name=EXCEPTIONS_TABLE,
-                    struct=_exceptions_struct(),
+                    struct=_EXCEPTIONS_STRUCT,
                     primary_key="exception_id",
                 )
             )

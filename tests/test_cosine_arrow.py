@@ -1,7 +1,8 @@
 """Arrow cosine kernels (r14, guide §4.2): bit-parity with the
 interpreted JVM folds on every reachable corner — plain vectors, zero
 vectors, NULL vectors, NULL elements, length mismatches, empty arrays —
-plus the dispatch gate itself (dim threshold, module toggle)."""
+plus the dispatch gate itself (dim threshold, module toggle) and the
+shared NULL contract for non-finite vectors."""
 
 from __future__ import annotations
 
@@ -78,65 +79,6 @@ def test_probe_cosine_zero_probe_is_all_null(spark, monkeypatch):
     assert all(r["s"] is None for r in rows)
 
 
-def test_pair_dot_kernel_parity_semantic_dedup(spark, monkeypatch):
-    """semantic_dedup_pairs with the kernel on/off: identical pair sets
-    and bit-identical cosine_sim (the SemDeDup quadratic path)."""
-    import random
-
-    rng = random.Random(11)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(DIM)]) for i in range(80)
-    ]
-    # plant near-dups so the threshold cut is non-trivial
-    for i in range(0, 80, 9):
-        rows[i] = (i, [x * 1.000001 for x in rows[(i + 9) % 80][1]])
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = [rows[j][1] for j in (5, 23, 41, 59)]
-
-    def run():
-        return sorted(
-            (r["id_a"], r["id_b"], _bits(r["cosine_sim"]))
-            for r in similarity.semantic_dedup_pairs(
-                df, threshold=0.4, centroids=cents
-            ).collect()
-        )
-
-    monkeypatch.setattr(vec, "COSINE_ARROW", True)
-    monkeypatch.setattr(vec, "PAIR_ARROW_MIN_DIM", 1)  # force the kernel
-    arrow = run()
-    monkeypatch.setattr(vec, "COSINE_ARROW", False)
-    jvm = run()
-    assert arrow == jvm
-    assert len(jvm) > 0
-
-
-def test_pair_cosine_kernel_parity_lsh_knn_join(spark, monkeypatch):
-    """lsh_knn_join (the dim-aware batched kNN) with the in-kernel-norm
-    pair cosine on/off: identical ranks and bit-identical cosine_sim,
-    incl. NULL/zero/mismatch corners on the corpus side."""
-    corpus = _corner_df(spark)
-    probes = spark.createDataFrame(
-        [(100, PROBE), (101, [1.0] * DIM)],
-        "probe_id long, embedding array<double>",
-    )
-
-    def run():
-        return sorted(
-            (r["probe_id"], r["vec_id"], r["rank"], _bits(r["cosine_sim"]))
-            for r in similarity.lsh_knn_join(
-                corpus, probes, k=5, n_planes=2, dim=DIM
-            ).collect()
-        )
-
-    monkeypatch.setattr(vec, "COSINE_ARROW", True)
-    monkeypatch.setattr(vec, "PAIR_ARROW_MIN_DIM", 1)  # force the kernel
-    arrow = run()
-    monkeypatch.setattr(vec, "COSINE_ARROW", False)
-    jvm = run()
-    assert arrow == jvm
-    assert len(jvm) > 0
-
-
 def test_quantized_probe_kernel_parity(spark, monkeypatch):
     """quantized_topk_rerank coarse pass on/off: identical output frame
     (integer inputs widen exactly — every corner shared)."""
@@ -186,29 +128,6 @@ def test_dispatch_gate_dim_and_toggle(spark, monkeypatch):
     assert "ArrowEvalPython" not in plan_off
 
 
-def test_pair_gate_stays_jvm_below_min_dim(spark, monkeypatch):
-    """The PAIR kernels have a higher dim gate than the probe kernels
-    (two vectors per row cross the boundary): below PAIR_ARROW_MIN_DIM —
-    including every unknown-dim call — the pair plan must stay pure JVM;
-    forcing the gate brings exactly one ArrowEvalPython."""
-    rows = [(i, [float(i + j) for j in range(DIM)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = [rows[j][1] for j in (3, 21)]
-    monkeypatch.setattr(vec, "COSINE_ARROW", True)
-    assert DIM < vec.PAIR_ARROW_MIN_DIM  # the shipped gate
-    plan = (
-        similarity.semantic_dedup_pairs(df, threshold=0.1, centroids=cents)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ArrowEvalPython" not in plan
-    monkeypatch.setattr(vec, "PAIR_ARROW_MIN_DIM", 1)
-    plan_forced = (
-        similarity.semantic_dedup_pairs(df, threshold=0.1, centroids=cents)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan_forced.count("ArrowEvalPython") == 1
-
-
 def test_probe_kernel_single_evaluation_under_filter(spark, monkeypatch):
     """Guide §4.4: a filter over the kernel's output column must not
     duplicate the Python evaluation node in the optimized plan."""
@@ -225,3 +144,40 @@ def test_probe_kernel_single_evaluation_under_filter(spark, monkeypatch):
         .toString()
     )
     assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_non_finite_vectors_rank_last_on_both_paths(spark, monkeypatch):
+    """A NaN or ±inf element gives a NULL similarity on the JVM path
+    (dim 8, below COSINE_ARROW_MIN_DIM) as on the kernel path (dim 32),
+    so such rows rank last: Spark orders NaN above every number, so a
+    NaN similarity would take the top of top-k."""
+    monkeypatch.setattr(vec, "COSINE_ARROW", True)
+    assert 8 < vec.COSINE_ARROW_MIN_DIM <= 32
+    results = {}
+    for dim in (8, 32):
+        rows = [
+            (0, [1.0] * dim),
+            (1, [math.inf] + [1.0] * (dim - 1)),
+            (2, [math.nan] + [1.0] * (dim - 1)),
+            (3, [1.0] * (dim - 1) + [0.5]),
+        ]
+        df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        )
+        probe = [1.0] * dim
+        probes = spark.createDataFrame(
+            [(100, probe)], "probe_id long, embedding array<double>"
+        )
+        top2 = similarity.brute_force_topk(df, probe, k=2).collect()
+        every = similarity.brute_force_topk(df, probe, k=4).collect()
+        joined = sorted(
+            similarity.knn_join(df, probes, k=4).collect(),
+            key=lambda r: r["rank"],
+        )
+        results[dim] = (
+            [r["vec_id"] for r in top2],
+            [(r["vec_id"], r["cosine_sim"] is None) for r in every],
+            [(r["vec_id"], r["cosine_sim"] is None) for r in joined],
+        )
+    expected_rank = [(0, False), (3, False), (1, True), (2, True)]
+    assert results[8] == results[32] == ([0, 3], expected_rank, expected_rank)

@@ -285,6 +285,22 @@ def test_registry_ddl_is_copy_on_write(spark):
     assert after.defaults == {"is_stock": "true"}
 
 
+def test_registry_primary_keys_is_a_snapshot(spark):
+    """primary_keys() returns a copy: a later register/drop leaves a
+    snapshot taken before it unchanged."""
+    reg = TableRegistry()
+    df = spark.createDataFrame([], "author_id INT, email STRING")
+    reg.register_from_df("db", "authors", df, primary_key="author_id")
+    reg.register_from_df("db", "novels", df, primary_key="email")
+    snap = reg.primary_keys()
+    assert snap == {("db", "authors"): "author_id", ("db", "novels"): "email"}
+    reg.register_from_df("db", "sales", df, primary_key="author_id")
+    reg.drop("db", "novels")
+    assert snap == {("db", "authors"): "author_id", ("db", "novels"): "email"}
+    assert reg.primary_keys() == {
+        ("db", "authors"): "author_id", ("db", "sales"): "author_id"}
+
+
 def test_statistics_from_envelope_batch(spark):
     svc = StatisticsService()
     df = spark.createDataFrame(
